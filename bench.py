@@ -1951,7 +1951,7 @@ def _cold_1m_subprocess() -> tuple[float, float, int | None] | None:
     — fail safe, same rule as every other declined retry).
 
     Host-headroom caveat (r11 review): the subprocess allocates a
-    SECOND driver JVM (SPARK_DRIVER_MEMORY, default 16g) while the
+    SECOND driver JVM (SPARK_DRIVER_MEMORY, default ¾ of RAM up to 16g) while the
     parent session stays resident — on a host without that headroom
     the rerun fails (rc!=0 / timeout) and the first measurement
     stands; the recourse degrades safely but cannot clear noise

@@ -6,7 +6,7 @@ as an idiomatic Spark engine:
 
 - ``engine_batch``   — deterministic batch replay of the transaction protocol
   (reference operators S1/S2/S3, flink/StreamyDb.scala:35-175).
-- ``streaming``      — Structured Streaming parity via transformWithStateInPandas.
+- ``streaming``      — Structured Streaming parity via applyInPandasWithState.
 - ``operators``      — the relational surface (SURVEY.md §2.6) plus
   training-data-pipeline operators (dedup, similarity search, text analysis,
   multimodal plumbing).

@@ -1,7 +1,10 @@
 """Pure-Python serial-replay oracle (SURVEY.md §5.2.1).
 
 The ground truth the distributed engine must match: fold transactions in
-(ts, kafka_partition, kafka_offset) order over a dict, commit iff every
+(ts, kafka_partition, kafka_offset, transaction_id) order over a dict —
+the id breaks the tie between transactions exploded from one
+List[Transaction] record, as the reference sorter does
+(flink/StreamyDb.scala:44-49) — commit iff every
 assert matches under null-safe equality (reference
 flink/StreamyDb.scala:166-172), apply updates atomically (NULL = delete,
 flink:111-118). ~30 lines, obviously correct, O(n) single-threaded.
@@ -32,7 +35,9 @@ def serial_replay(
 
     ordered = sorted(
         transactions,
-        key=lambda t: (t["ts"], t["kafka_partition"], t["kafka_offset"]),
+        key=lambda t: (
+            t["ts"], t["kafka_partition"], t["kafka_offset"], t["transaction_id"]
+        ),
     )
     for txn in ordered:
         ok = True

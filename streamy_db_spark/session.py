@@ -127,6 +127,16 @@ def checkpoint_preserving(df):
         return df.localCheckpoint(eager=True)
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
+    ``min(16 GiB, ¾ of physical memory)``, in MiB. A fixed 16g on a host
+    with 15 GiB and no swap lets a heap that grows toward its cap be
+    killed by the kernel instead of garbage-collected; the ¼ left over
+    holds the JVM's off-heap memory, the Python workers and the OS."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, phys * 3 // 4 // 2**20)}m"
+
+
 def get_spark(app_name: str = "streamy_db_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
@@ -143,7 +153,10 @@ def get_spark(app_name: str = "streamy_db_spark", cpus: int | None = None) -> Sp
         # vectorized reader rejects; read as epoch-nanos long and derive a
         # proper timestamp in the loader (full ns precision kept for ordering).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -1,26 +1,45 @@
 """File-coupled streaming replay loop — the tested stand-in for the
-reference's Kafka topology (SURVEY.md §3.1: no broker in this
-container, so parquet directories stand in for the four topics; the
-operator topology — key stage, txn stage, feedback derivation — is
-identical to streaming/engine_stream's Kafka wiring in
-sources/kafka.py).
+reference's Kafka topology: parquet directories stand in for the four
+topics (SURVEY.md §3.1), around the same operators — key stage, txn
+stage, feedback derivation — that sources/kafka.py wires to Kafka.
 
-Lives in the library (not tests/) because it is BOTH the correctness
-harness (tests/test_engine_stream.py drives oracle-parity, kill-restart
-and redelivery scenarios through it) and the streaming THROUGHPUT bench
-surface (bench.py protocol_stream_10k runs it under the RocksDB state
-store provider) — the r7 verdict's "streaming engine has correctness
-tests but zero recorded throughput" gap.
+ONE runner drives the topology: it starts the two stateful queries
+once on processingTime triggers, drives them until every transaction
+has a verdict, tears them down with one quiesce-then-stop routine
+(``_Topology.stop``) and collects one verdict per transaction. The two
+public entry points differ only in the drive policy:
+
+- ``run_streaming_replay`` — **drain per round**: write a heartbeat,
+  then ``processAllAvailable`` on each stage, until done. Deterministic
+  rounds are what the crash-restart (``interrupt_rounds``) and
+  redelivery (``duplicate_feedback``) scenarios need.
+- ``run_streaming_replay_continuous`` — **poll**: a heartbeat thread
+  advances the watermark while the queries cycle on their own triggers
+  (the reference's deployment shape, flink/StreamyDb.scala:239), and
+  the runner polls for completion until ``timeout_s``.
+
+It is both the correctness harness (tests/test_engine_stream.py) and a
+benchmark surface (perfbench's stream-continuous workload, bench.py).
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
+import logging
 import os
+import shutil
+import threading
+import time
 from datetime import datetime, timezone
 
 from streamy_db_spark import fixtures
 from streamy_db_spark.streaming import engine_stream as es
+
+log = logging.getLogger("streamy_db_spark")
+
+#: The two stateful queries, in feedback order.
+_STAGES = ("key_stage", "txn_stage")
 
 
 @contextlib.contextmanager
@@ -28,20 +47,16 @@ def _conf_override(spark, confs: dict[str, str]):
     """Set session SQL confs for the duration of a block, restoring
     each on exit — set back to its prior readable value, or unset when
     the conf had none (some streaming confs have no registered default
-    visible to conf.get). The ONE shared implementation for the replay
-    drivers' shuffle_partitions knob and with_rocksdb: three hand-rolled
-    save/set/restore copies had already diverged, and one leaked its
-    setting into the session when setup raised before its try block
-    (r9 review)."""
+    visible to conf.get). Shared by the runner's shuffle_partitions knob
+    and with_rocksdb, so no hand-rolled copy can leak a setting."""
     prev: dict[str, str | None] = {}
     try:
         # the set loop runs INSIDE the try: a conf.set that raises
         # partway through the dict must still restore the keys already
-        # applied (r9 second review — the leak the helper exists to fix,
-        # one level up). prev records a key only AFTER its set succeeds:
-        # a key whose set failed was never modified, and re-setting it in
-        # the finally would raise the same error again, masking the
-        # original exception (r9 third review).
+        # applied. prev records a key only AFTER its set succeeds: a key
+        # whose set failed was never modified, and re-setting it in the
+        # finally would raise the same error again, masking the original
+        # exception.
         for key, val in confs.items():
             try:
                 old = spark.conf.get(key)
@@ -57,28 +72,21 @@ def _conf_override(spark, confs: dict[str, str]):
                     spark.conf.unset(key)
                 else:
                     spark.conf.set(key, old)
-            except Exception:  # noqa: BLE001 - best-effort: one failed
-                pass  # restore must not abort the remaining restores
+            except Exception as exc:  # noqa: BLE001 - one failed restore
+                # must not abort the remaining restores
+                log.warning("could not restore conf %s: %s", key, exc)
 
 
-#: pyarrow mirror of engine_stream.KEY_MSG — heartbeats are written
-#: driver-side without a Spark job (see write_heartbeat).
-def _key_msg_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            pa.field("ts", pa.timestamp("us", tz="UTC"), nullable=False),
-            pa.field("ts_ms", pa.int64(), nullable=False),
-            pa.field("kafka_partition", pa.int32(), nullable=False),
-            pa.field("kafka_offset", pa.int64(), nullable=False),
-            pa.field("kind", pa.int32(), nullable=False),
-            pa.field("transaction_id", pa.string(), nullable=False),
-            pa.field("key", pa.string(), nullable=False),
-            pa.field("succeeded", pa.bool_(), nullable=True),
-            pa.field("value", pa.string(), nullable=True),
-        ]
-    )
+def _publish(final: str, write) -> None:
+    """Land a file atomically for the file sources: ``write`` fills a
+    dot-prefixed temp name in the same directory (hidden from Spark's
+    file listing and from pyarrow's), then ``os.rename`` moves it into
+    place — so a trigger listing the directory never reads a
+    half-written file."""
+    head, tail = os.path.split(final)
+    tmp = os.path.join(head, f".{tail}.tmp")
+    write(tmp)
+    os.rename(tmp, final)
 
 
 def write_heartbeat(spark, requests_dir: str, n: int) -> None:
@@ -90,21 +98,18 @@ def write_heartbeat(spark, requests_dir: str, n: int) -> None:
     streams' micro-batches — measured at a **7.5 s mean per beat** under
     the continuous 10k replay (14 beats ≈ 106 s of scheduler contention
     for one row each). A one-row parquet write is microseconds of local
-    I/O. Atomic for the file source: written to a dot-prefixed temp name
-    (hidden from Spark's file listing) then renamed into place, so a
-    trigger can never list a half-written file. The filename carries a
-    per-call uuid besides ``n``: FileStreamSource dedups by PATH, so a
-    resumed run against an existing checkpoint (where ``n`` restarts at
-    0) must never rename a fresh beat over a path the source already
-    recorded as seen — that beat would be invisible and the watermark
-    would wedge (r9 review). ``spark`` is kept in the signature for
-    call-site compatibility (and future remote-FS use — the
-    file-coupled loop itself is the local stand-in for Kafka, so local
-    paths are inherent here)."""
+    I/O, landed atomically (``_publish``), with the arrow schema
+    derived from KEY_MSG. The filename carries a per-call uuid besides
+    ``n``: FileStreamSource dedups by PATH, so a resumed run against an
+    existing checkpoint (where ``n`` restarts at 0) must never rename a
+    fresh beat over a path the source already recorded as seen — that
+    beat would be invisible and the watermark would wedge. ``spark`` is
+    unused; it keeps the call sites uniform."""
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     now = datetime.now(timezone.utc)
     table = pa.table(
@@ -119,27 +124,21 @@ def write_heartbeat(spark, requests_dir: str, n: int) -> None:
             "succeeded": [None],
             "value": [None],
         },
-        schema=_key_msg_arrow_schema(),
+        schema=to_arrow_schema(es.KEY_MSG),
     )
     os.makedirs(requests_dir, exist_ok=True)
     stem = f"hb_{n}_{uuid.uuid4().hex[:12]}.parquet"
-    final = os.path.join(requests_dir, stem)
-    tmp = os.path.join(requests_dir, f".{stem}.tmp")
-    pq.write_table(table, tmp)
-    os.rename(tmp, final)
+    _publish(os.path.join(requests_dir, stem), lambda p: pq.write_table(table, p))
 
 
 def _loop_dirs(spark, txns, tmp):
-    """Shared topology setup for BOTH loop drivers (availableNow and
-    continuous — extracted so the bench surface and the correctness
-    harness can never drift, r9 review): the four 'topic' directories,
-    the materialized transaction log, and the derived request stream.
+    """Topology setup: the four 'topic' directories, the materialized
+    transaction log, and the derived request stream.
     Returns (dirs, requests_dir, n_txns)."""
     d = {n: os.path.join(tmp, n) for n in
          ("input", "feedback", "read_results", "results", "ckpt")}
-    os.makedirs(d["feedback"], exist_ok=True)
-    os.makedirs(d["read_results"], exist_ok=True)
-    os.makedirs(d["results"], exist_ok=True)
+    for n in ("feedback", "read_results", "results"):
+        os.makedirs(d[n], exist_ok=True)
 
     txn_df = fixtures.to_dataframe(spark, txns)
     txn_df.write.mode("overwrite").parquet(d["input"])
@@ -153,67 +152,32 @@ def _loop_dirs(spark, txns, tmp):
     return d, requests_dir, n_txns
 
 
-def _key_stage_stream(spark, d, requests_dir, watermark_delay=None, throttle=None):
-    """Q1 — key stage: requests+heartbeats ∪ feedback → S1+S2."""
-    reqs = spark.readStream.schema(es.KEY_MSG).option(
-        "recursiveFileLookup", "true"
-    ).options(**(throttle or {})).parquet(requests_dir)
-    # recursiveFileLookup: feedback lands in per-batch subdirectories
-    # since the r10 fused txn sink (and it disables partition-column
-    # inference, so the batch= path segment never surfaces)
-    fb = spark.readStream.schema(es.KEY_MSG).option(
-        "recursiveFileLookup", "true"
-    ).parquet(d["feedback"])
-    merged = reqs.unionByName(fb)
-    if watermark_delay is None:
-        return es.key_stage(merged)
-    return es.key_stage(merged, watermark=watermark_delay)
-
-
-def _txn_stage_stream(spark, d):
-    """Q2 — txn stage: bodies ∪ read-results → S3."""
-    bodies = es.derive_txn_bodies(
-        spark.readStream.schema(fixtures.schemas.TRANSACTION_LOG).parquet(
-            d["input"]
-        )
-    )
-    reads = es.read_results_as_txn_msgs(
-        spark.readStream.schema(es.READ_RESULT_OUT).parquet(d["read_results"])
-    )
-    return es.txn_stage(bodies.unionByName(reads))
-
-
 def _txn_fused_write(d):
     """``foreachBatch`` for the txn stage that writes the batch's
-    results AND its derived feedback (stateless D5) in one pass —
-    removing the third streaming query from the loop (r9 verdict item
-    4: the feedback hop cost a full query start/stop per availableNow
-    round and a trigger-latency hop per continuous round, for a
-    row-level projection).
+    results AND its derived feedback (stateless D5) in one pass — no
+    third streaming query for a row-level projection, and the key stage
+    sees feedback one file discovery after the trigger that landed the
+    results.
 
     Idempotence: both writes go through sinks.idempotent_parquet_sink
-    (per-batch ``batch=<id>`` directories with overwrite — ONE tested
-    implementation of the exactly-once recipe, not a copy) — a batch
+    (per-batch ``batch=<id>`` directories with overwrite), so a batch
     replayed after a crash rewrites the same deterministic content
     (its rows derive from the checkpointed source offsets) instead of
-    appending duplicates, preserving the one-verdict-per-transaction
-    invariant _collect_verdicts enforces. Readers of both dirs use
-    recursiveFileLookup (which also disables partition-column
-    inference, so the ``batch=`` path segment never surfaces as a
-    column).
+    appending duplicates — the one-verdict-per-transaction invariant
+    _collect_verdicts enforces. Readers of both dirs use
+    recursiveFileLookup.
 
-    CONCURRENT-READER CONTRACT (r10 advice): foreachBatch plain writes
-    carry no _spark_metadata commit log, and a crash-replayed batch's
+    CONCURRENT-READER CONTRACT: foreachBatch plain writes carry no
+    _spark_metadata commit log, and a crash-replayed batch's
     per-directory overwrite DELETES files a concurrent reader may have
     already listed — so a reader racing the writer can transiently see
     a FileNotFoundException (vanished listed file) as well as double/
     under-counts (half-written directory), and must tolerate BOTH by
     retrying, never by failing the run. In-tree readers comply: the
-    continuous done-poll wraps its Spark-side count in
-    catch-retry-next-tick (and _raw_result_rows returns None on any
-    unreadable footer), the key-stage feedback file source only lists
-    after the trigger that committed the files, and _collect_verdicts
-    runs strictly after every query has stopped."""
+    done check retries its Spark-side count on the next check (and
+    _raw_result_rows returns None on an unreadable footer), the key
+    stage's feedback source lists only committed files, and
+    _collect_verdicts runs strictly after every query has stopped."""
     from streamy_db_spark.streaming.sinks import idempotent_parquet_sink
 
     write_results = idempotent_parquet_sink(d["results"])
@@ -237,110 +201,91 @@ def _txn_fused_write(d):
         finally:
             # both sinks are synchronous parquet writes — the batch is
             # fully consumed; release its checkpoint or a long-running
-            # query pins one per trigger forever (guide §5, the r13
-            # replay lifecycle rule)
+            # query pins one per trigger forever (guide §5, the replay
+            # lifecycle rule)
             release_local_checkpoints(b)
 
     return write
 
 
+def _results(spark, d):
+    return spark.read.schema(es.TXN_RESULT_OUT).option(
+        "recursiveFileLookup", "true"
+    ).parquet(d["results"])
+
+
 def _collect_verdicts(spark, d):
     """Final verdict map with the one-verdict-per-transaction invariant
-    (explicit raise: survives python -O, unlike assert — r8 review)."""
-    results_df = (
-        spark.read.schema(es.TXN_RESULT_OUT)
-        .option("recursiveFileLookup", "true")
-        .parquet(d["results"])
-        .select("transaction_id", "succeeded")
-    )
-    results = results_df.collect()
-    n_distinct = results_df.select("transaction_id").distinct().count()
-    if len(results) != n_distinct:
+    (explicit raise: survives python -O, unlike assert)."""
+    results = _results(spark, d).select("transaction_id", "succeeded").collect()
+    verdicts = {r["transaction_id"]: r["succeeded"] for r in results}
+    if len(results) != len(verdicts):
         raise RuntimeError(
-            f"duplicate verdicts: {len(results)} rows for "
-            f"{n_distinct} transactions"
+            f"duplicate verdicts: {len(results)} rows for {len(verdicts)} transactions"
         )
-    return {r["transaction_id"]: r["succeeded"] for r in results}
+    return verdicts
 
 
-def run_streaming_replay(
-    spark,
-    txns,
-    tmp,
-    max_rounds=30,
-    duplicate_feedback=False,
-    interrupt_rounds=frozenset(),
-    return_dirs=False,
-    watermark_delay="0 seconds",
-    stats=None,
-    shuffle_partitions=None,
-):
-    """``interrupt_rounds``: in those loop rounds the key stage is KILLED
-    mid-run — the source is throttled to one file per micro-batch so the
-    sink has committed a partial round's output when stop() lands, and
-    the next round restarts from the same checkpoint (the crash-recovery
-    scenario; reference flink/StreamyDb.scala:180-181 checkpointing).
+def _raw_result_rows(results_dir: str) -> int | None:
+    """Driver-side row count of the results sink via parquet footers —
+    NO Spark job (the Spark-side ``distinct().count()`` it gates
+    measured 1.4 s × 62 polls ≈ 88 s of scheduler contention in the
+    continuous 10k replay). Footer counts can see a batch directory
+    mid-(over)write, so this is a NECESSARY signal only — completion is
+    confirmed by the Spark-side read, whose distinct() also guards
+    against transient double-listings. pyarrow's default ignore_prefixes
+    skips dot/underscore paths, so _temporary task dirs are never read.
 
-    ``watermark_delay`` MUST cover the fixture's event-time span whenever
-    ingestion is multi-batch (interrupt rounds throttle to 1 file/batch):
-    with a 0-second delay, the first committed batch advances the
-    watermark to its own max event time and every older row in the
-    REMAINING request files is silently dropped as late (observed: batch
-    0 = one part file → watermark jumps to the fixture's :17 mark → ~85%
-    of the workload discarded; the loop then wedges with verdicts stuck
-    in ``early``). The single-batch tests get away with 0 because all
-    requests enter in one batch, before any watermark advance. This is
-    the same sizing rule production needs for out-of-order sources —
-    engine_stream._admit's docstring says exactly this.
+    Returns ``None`` — "can't tell", callers must fall back to the
+    Spark-side read — when the footer scan fails on anything but an
+    absent directory: e.g. ONE truncated orphan part file from a dead
+    task attempt would otherwise poison every subsequent poll and turn
+    a completed replay into a timeout."""
+    import pyarrow.dataset as pa_ds
 
-    ``shuffle_partitions``: same state-partition sizing knob as the
-    continuous runner (see run_streaming_replay_continuous) — applied
-    for the whole loop and restored on exit, so both loop forms can be
-    benched under identical state layouts and their delta isolates the
-    per-round query restart tax."""
-    confs = {}
-    if shuffle_partitions is not None:
-        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    with _conf_override(spark, confs):
-        return _run_streaming_replay_inner(
-            spark, txns, tmp, max_rounds, duplicate_feedback,
-            interrupt_rounds, return_dirs, watermark_delay, stats,
-        )
+    try:
+        return pa_ds.dataset(results_dir, format="parquet").count_rows()
+    except FileNotFoundError:
+        return 0  # sink dir absent: nothing written yet
+    except Exception:  # noqa: BLE001 - unreadable footer: unknown
+        return None
+
+
+def _await(cond, timeout_s: float) -> bool:
+    """Poll ``cond`` until it holds or ``timeout_s`` passes; returns
+    whether it held. The one wait loop of the stop routine and
+    ``kill_streaming_query``."""
+    deadline = time.time() + timeout_s
+    while not cond():
+        if time.time() >= deadline:
+            return False
+        time.sleep(0.05)
+    return True
 
 
 def kill_streaming_query(q, timeout_s: float = 60.0) -> None:
-    """Violently stop a streaming query — the crash-simulation
-    primitive shared by the replay loop's interrupt rounds and the
-    kill-restart tests (tests/stream_kill.py delegates here so the
-    contract lives in ONE place, r12 review). stop() interrupts the
-    in-flight micro-batch, and under load the interruption can surface
-    from stop()/awaitTermination as a QueryExecution error instead of a
-    clean termination; that error IS the simulated crash — swallow it.
-    Blocks until the instance actually releases (JVM-side cleanup lags
-    isActive) and raises if it never does, because a same-checkpoint
-    restart against a still-active twin fails with
-    'another instance of this query is already active'."""
-    import time as _t
-
+    """Violently stop a streaming query — the crash-simulation primitive
+    of the interrupt rounds and the kill-restart tests
+    (tests/stream_kill.py). Unlike ``_Topology.stop`` it interrupts the
+    trigger in flight; the error that can surface from stop() or as the
+    query's exception IS the simulated crash, so it is logged, not
+    raised. Blocks until the instance releases and raises if it never
+    does: a same-checkpoint restart against a still-active twin fails."""
     try:
         q.stop()
-    except Exception:  # noqa: BLE001 - the kill is the point
-        pass
-    try:
-        q.awaitTermination(timeout_s)
-    except Exception:  # noqa: BLE001
-        pass
-    deadline = _t.time() + timeout_s
-    while _t.time() < deadline and q.isActive:
-        _t.sleep(0.2)
-    if q.isActive:
+    except Exception as exc:  # noqa: BLE001 - the kill is the point
+        log.info("killed streaming query %s: %s", q.id, exc)
+    if not _await(lambda: not q.isActive, timeout_s):
         raise RuntimeError("killed streaming query failed to release")
+    exc = q.exception()
+    if exc is not None:
+        log.info("killed streaming query %s died with: %s", q.id, exc)
 
 
 #: Substrings identifying the KNOWN-TRANSIENT start failures worth
 #: retrying. Anything else (bad checkpoint, missing path, analysis
 #: error) is deterministic and must surface immediately — retrying it
-#: 5x with sleeps only delays and blurs the real error (r12 advice).
+#: 5x with sleeps only delays and blurs the real error.
 _TRANSIENT_START_MARKERS = (
     # a just-killed twin's JVM-side cleanup lags q.isActive going false
     "already active",
@@ -353,418 +298,367 @@ def start_query_with_retry(start, attempts: int = 5, delay_s: float = 1.0):
     """Start (or restart) a streaming query, retrying ONLY the known
     transient races — chiefly 'another instance of this query is
     already active' when a just-killed twin's JVM-side cleanup lags
-    q.isActive going false (the r12 review's gap: the tests got this
-    retry in r12's deflake, the library's restart-after-kill path did
-    not). Deterministic start failures re-raise on first sight."""
-    import time as _t
-
+    q.isActive going false. Deterministic start failures re-raise on
+    first sight."""
     for i in range(attempts):
         try:
             return start()
         except Exception as exc:  # noqa: BLE001 - transient-matched below
             msg = str(exc).lower()
-            if not any(m in msg for m in _TRANSIENT_START_MARKERS):
+            if i == attempts - 1 or not any(m in msg for m in _TRANSIENT_START_MARKERS):
                 raise
-            if i == attempts - 1:
-                raise
-            _t.sleep(delay_s)
-    raise AssertionError("unreachable")  # loop always returns or raises
+            time.sleep(delay_s)
 
 
-#: Trigger cadence for the round-driven loop's PERSISTENT queries — a
-#: drain-polling detail of this harness form (processAllAvailable does
-#: not force a trigger, it waits for one), not a deployment knob; the
-#: continuous runner keeps its production-shaped default.
-_ROUND_TRIGGER = "50 milliseconds"
+class _Topology:
+    """One replay's directories, its two stateful queries and its
+    heartbeat writer — what both drive policies act on."""
 
+    def __init__(self, spark, txns, tmp, trigger, watermark_delay, shuffle_partitions):
+        self.spark = spark
+        self.d, self.requests_dir, self.n_txns = _loop_dirs(spark, txns, tmp)
+        self.partitions = self._state_partitions(shuffle_partitions)
+        self.trigger = trigger
+        self.watermark_delay = watermark_delay
+        self.queries: dict[str, object] = {}
+        self.n_done, self.raw = 0, None  # last done check, for messages
+        self._hb_stop = threading.Event()
+        self._hb_thread: threading.Thread | None = None
+        self._hb_err: list[Exception] = []
 
-def _drain_all_available(q, name: str, timeout_s: float = 120.0) -> None:
-    """Block until ``q`` has processed every source file available now
-    — the awaitTermination-gated round primitive (r13 verdict item 1:
-    the loop used to STOP and RESTART both stateful queries every
-    feedback round, paying query teardown + state-store reload + plan
-    compile ~13 times per 10k replay; a living query pays only the
-    batch). processAllAvailable has no timeout parameter, so it runs on
-    a helper thread to preserve the loop's bounded failure mode, and
-    any query exception is re-raised here (PAA returns when the stream
-    dies)."""
-    import threading
+    def start(self, name, trigger=None, throttle=None):
+        """THE query start of both stages: the runner's processingTime
+        cadence unless ``trigger`` says otherwise (the interrupt round's
+        ``availableNow``, with a request-source ``throttle``). Retried: a
+        restart after an interrupt round races the killed twin."""
+        spark, d = self.spark, self.d
 
-    t = threading.Thread(target=q.processAllAvailable, daemon=True)
-    t.start()
-    t.join(timeout_s)
-    if t.is_alive():
-        raise RuntimeError(f"{name} did not drain in {timeout_s:.0f}s")
-    exc = q.exception()
-    if exc is not None:
-        raise RuntimeError(f"{name} streaming query failed: {exc}")
-
-
-def _run_streaming_replay_inner(
-    spark, txns, tmp, max_rounds, duplicate_feedback, interrupt_rounds,
-    return_dirs, watermark_delay, stats,
-):
-    d, requests_dir, n_txns = _loop_dirs(spark, txns, tmp)
-    schema_results = es.TXN_RESULT_OUT
-
-    # The two stateful queries START ONCE and stay alive across feedback
-    # rounds (guide §2.6/§5; r13 verdict item 1 — the per-round
-    # availableNow restarts dominated the lane's wall clock: measured
-    # 2-7 s per round-and-query at the 10k shape even when the round
-    # carried a handful of rows, against a sub-second batch). Each round
-    # writes its heartbeat and then DRAINS key stage, then txn stage,
-    # with processAllAvailable — the same deterministic
-    # round-0..round-N fixpoint as the old restart form (the engine is
-    # feedback-arrival-order-insensitive by construction, and any
-    # overlap between the living queries only shortens the round count,
-    # never changes a verdict — oracle-parity suites pin this).
-    # Interrupt rounds keep the availableNow+kill machinery: the crash
-    # scenario NEEDS a mid-run stop against a throttled source, and the
-    # next normal round restarts the persistent query from the same
-    # checkpoint (trigger mode is not pinned into a checkpoint).
-    queries: dict[str, object] = {}
-
-    def _start_key():
-        return (
-            _key_stage_stream(spark, d, requests_dir, watermark_delay)
-            .writeStream.format("parquet")
-            .option("path", d["read_results"])
-            .option("checkpointLocation", os.path.join(d["ckpt"], "key_stage"))
-            .trigger(processingTime=_ROUND_TRIGGER)
-            .start()
-        )
-
-    def _start_txn():
-        # txn stage + feedback derivation in ONE query (r9 verdict item
-        # 4): the stateless feedback hop used to cost a third query
-        return (
-            _txn_stage_stream(spark, d)
-            .writeStream.foreachBatch(_txn_fused_write(d))
-            .option("checkpointLocation", os.path.join(d["ckpt"], "txn_stage"))
-            .trigger(processingTime=_ROUND_TRIGGER)
-            .start()
-        )
-
-    def _drain(name, start):
-        q = queries.get(name)
-        if q is None or not q.isActive:
-            # (re)start: retried because the round AFTER an interrupt
-            # restarts the key stage from the same checkpoint its
-            # killed twin may still be releasing
-            q = start_query_with_retry(start)
-            queries[name] = q
-        _drain_all_available(q, name)
-
-    def run_and_kill(df_stream, out_dir, ckpt_name):
-        """Start, wait for ≥1 committed micro-batch, then stop() mid-run:
-        the checkpoint ends up between batches of one logical round —
-        committed sink output for a prefix, pending source files for the
-        rest."""
-        import time as _t
-
-        q = (
-            df_stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(d["ckpt"], ckpt_name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        deadline = _t.time() + 60
-        while _t.time() < deadline and q.isActive and q.lastProgress is None:
-            _t.sleep(0.2)
-        # Violent kill (kill_streaming_query docstring): dying-query
-        # errors are the simulated crash; correctness is asserted on
-        # the restarted round's recovery (r11 verdict item 2 deflake).
-        kill_streaming_query(q)
-
-    try:
-        for rnd in range(max_rounds):
-            write_heartbeat(spark, requests_dir, rnd)
-
-            if rnd in interrupt_rounds:
-                # The crash must land on the ONE key-stage instance: a
-                # living persistent twin would hold the checkpoint lock
-                # (and keep processing through the "crash"), so it is
-                # killed first — which is itself part of the scenario.
-                live = queries.pop("key_stage", None)
-                if live is not None:
-                    kill_streaming_query(live)
-                key_df = _key_stage_stream(
-                    spark, d, requests_dir, watermark_delay,
-                    {"maxFilesPerTrigger": "1"},
+        def start():
+            if name == "key_stage":
+                # key stage: requests+heartbeats ∪ feedback → S1+S2.
+                # recursiveFileLookup: feedback lands in the fused sink's
+                # per-batch subdirectories, and it disables
+                # partition-column inference, so batch= never surfaces
+                reqs = spark.readStream.schema(es.KEY_MSG).option(
+                    "recursiveFileLookup", "true"
+                ).options(**(throttle or {})).parquet(self.requests_dir)
+                fb = spark.readStream.schema(es.KEY_MSG).option(
+                    "recursiveFileLookup", "true"
+                ).parquet(d["feedback"])
+                w = es.key_stage(
+                    reqs.unionByName(fb), watermark=self.watermark_delay
+                ).writeStream.format("parquet").option("path", d["read_results"])
+            else:
+                # txn stage: bodies ∪ read-results → S3, its fused sink
+                # also deriving the feedback (no third query)
+                bodies = es.derive_txn_bodies(spark.readStream.schema(
+                    fixtures.schemas.TRANSACTION_LOG).parquet(d["input"]))
+                reads = es.read_results_as_txn_msgs(spark.readStream.schema(
+                    es.READ_RESULT_OUT).parquet(d["read_results"]))
+                w = es.txn_stage(bodies.unionByName(reads)).writeStream.foreachBatch(
+                    _txn_fused_write(d)
                 )
-                run_and_kill(key_df, d["read_results"], "key_stage")
-                # Crash landed mid-round; the NEXT round restarts the
-                # persistent query from the same checkpoint and
-                # finishes the remaining files.
-                continue
-            _drain("key_stage", _start_key)
-            _drain("txn_stage", _start_txn)
+            return (
+                w.option("checkpointLocation", os.path.join(d["ckpt"], name))
+                .trigger(**(trigger or {"processingTime": self.trigger}))
+                .start()
+            )
 
-            # Footer-count gate first (no Spark job — same discipline
-            # as the continuous loop's done-poll): most rounds are
-            # provably not done from the footers alone, and the
-            # Spark-side distinct count this skips measured ~0.7 s ×
-            # round — ~10% of the whole 10k replay's wall clock.
-            raw = _raw_result_rows(d["results"])
-            if raw is not None and raw < n_txns:
-                continue
+        # read once, at start, and pinned into the checkpoint
+        parts = {"spark.sql.shuffle.partitions": str(self.partitions[name])}
+        with _conf_override(spark, parts):
+            self.queries[name] = start_query_with_retry(start)
+        return self.queries[name]
+
+    def _state_partitions(self, explicit) -> dict:
+        """Each stage's state-partition count: ``explicit`` if set, else
+        the session's count capped at the keys the stage can hold (its
+        distinct keys plus the heartbeats' one; its transactions). Every
+        micro-batch runs a Python worker and a state commit per
+        partition, empty ones too: a 5-transaction replay measured
+        ~2.2 s per micro-batch at 8 partitions, ~1.2 s at 2-4 (4 cores)."""
+        if explicit is not None:
+            return dict.fromkeys(_STAGES, explicit)
+        default = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        n_keys = self.spark.read.parquet(self.requests_dir).select("key").distinct().count()
+        return {"key_stage": max(1, min(default, n_keys + 1)),
+                "txn_stage": max(1, min(default, self.n_txns))}
+
+    def check(self, name) -> None:
+        """Raise if ``name`` died, or was stopped by any hand but the
+        teardown's — a dead query is surfaced, never silently restarted
+        — or if the heartbeat writer failed."""
+        q = self.queries[name]
+        exc = q.exception()
+        if exc is not None:
+            raise RuntimeError(f"{name} streaming query failed: {exc}")
+        if not q.isActive:
+            raise RuntimeError(f"{name} streaming query stopped unexpectedly")
+        if self._hb_err:
+            raise RuntimeError(f"heartbeat writer failed: {self._hb_err[0]}")
+
+    def drain(self, name, timeout_s: float = 120.0) -> None:
+        """Block until stage ``name`` (started if absent) has processed
+        every source file available now. processAllAvailable waits for a
+        trigger (it does not force one) and has no timeout parameter, so
+        it runs on a helper thread to keep the failure mode bounded. It
+        returns, or raises, when the stream dies: check() names the stage."""
+        if name not in self.queries:
+            self.start(name)
+        self.check(name)
+        q, err = self.queries[name], []
+
+        def paa():
             try:
-                n_done = (
-                    spark.read.schema(schema_results)
-                    .option("recursiveFileLookup", "true")
-                    .parquet(d["results"])
-                    .select("transaction_id")
-                    .distinct()
-                    .count()
-                )
-            except Exception:
-                n_done = 0
-            if n_done >= n_txns:
-                if stats is not None:
-                    # rounds = feedback-loop iterations until every txn
-                    # had a verdict (the streaming analogue of the batch
-                    # replay's wavefront count) — recorded by bench.py
-                    stats["rounds"] = rnd + 1
-                break
+                q.processAllAvailable()
+            except Exception as exc:  # noqa: BLE001 - raised below
+                err.append(exc)
 
-        if duplicate_feedback:
-            # At-least-once delivery: redeliver EVERY commit
-            # notification, then drain the two stateful stages once
-            # more. The S3 'done' gate must swallow the duplicates — no
-            # new result rows may appear (output-level exactly-once
-            # from at-least-once input, the property the reference
-            # relies on; SURVEY §2.3 exactly-once note).
-            import shutil
+        t = threading.Thread(target=paa, daemon=True)
+        t.start()
+        t.join(timeout_s)
+        if t.is_alive():
+            raise RuntimeError(f"{name} did not drain in {timeout_s:.0f}s")
+        self.check(name)
+        if err:
+            raise RuntimeError(f"{name} drain failed: {err[0]}")
 
-            # feedback lives in per-batch subdirectories since the r10
-            # fused sink — walk them; the copies keep their
-            # subdirectory (the file source's recursive listing sees
-            # any new path)
-            for root, _dirs, files in os.walk(d["feedback"]):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        shutil.copy(
-                            os.path.join(root, f),
-                            os.path.join(root, f"dup_{f}"),
-                        )
-            write_heartbeat(spark, requests_dir, 10_000)
-            # all request files were already admitted in earlier
-            # rounds; this pass only drains the duplicated feedback
-            # (kind-2 messages apply on arrival — the watermark plays
-            # no role in their application)
-            _drain("key_stage", _start_key)
-            _drain("txn_stage", _start_txn)
-    finally:
-        # _collect_verdicts must run strictly after every query has
-        # stopped (the fused sink's concurrent-reader contract); stop
-        # gracefully — these are healthy queries, not crash scenarios.
-        for q in queries.values():
+    def done(self) -> bool:
+        """Whether every transaction has a committed verdict. The footer
+        count gates first (no Spark job, see _raw_result_rows); only
+        "possibly done" — or "can't tell" — pays for the Spark-side count."""
+        self.raw = _raw_result_rows(self.d["results"])
+        if self.raw is not None and self.raw < self.n_txns:
+            return False
+        try:
+            self.n_done = (
+                _results(self.spark, self.d).select("transaction_id").distinct().count()
+            )
+        except Exception as exc:  # noqa: BLE001 - sink mid-write: next check
+            log.debug("done check: results not readable yet: %s", exc)
+            self.n_done = 0
+        return self.n_done >= self.n_txns
+
+    def batch_ids(self) -> dict:
+        return {n: (q.lastProgress or {}).get("batchId") for n, q in self.queries.items()}
+
+    def start_heartbeats(self, interval_s: float) -> None:
+        """One beat now, then one every ``interval_s`` from a driver
+        thread, so watermarks advance while idle (reference D14,
+        core/HeartBeatGenerator.scala:40 beats every 5 s)."""
+        write_heartbeat(self.spark, self.requests_dir, 99_999)
+
+        def beat() -> None:
+            n = 0
+            while not self._hb_stop.wait(interval_s):
+                try:
+                    write_heartbeat(self.spark, self.requests_dir, n)
+                    n += 1
+                except Exception as exc:  # noqa: BLE001 - raised by check()
+                    self._hb_err.append(exc)
+                    return
+
+        self._hb_thread = threading.Thread(target=beat, daemon=True)
+        self._hb_thread.start()
+
+    def stop(self, failing: bool) -> None:
+        """Quiesce, then stop — the ONE teardown of both drive policies:
+        (1) stop the heartbeat writer; (2) drain the stages in feedback
+        order until a whole pass runs no new batch, so no source holds
+        unread data; (3) wait until no trigger is in flight; (4)
+        ``stop()``; (5) wait for ``isActive`` to go false; (6) raise
+        ``q.exception()``. ``stop()`` cancels a running trigger's Spark
+        job and interrupts its state-store commit (``CANNOT_COMMIT``, a
+        failed RocksDB changelog commit), and a state commit must land
+        whole or not at all. On the error path (``failing``) step 2 is
+        skipped — a dead peer or a wedged stage may never drain — and
+        teardown errors are logged, so they cannot mask the one in flight."""
+        self._hb_stop.set()
+        if self._hb_thread is not None:
+            self._hb_thread.join(timeout=10)
+        errors: list[Exception] = []
+        try:
+            for _ in range(0 if failing else 10):
+                before = self.batch_ids()
+                for name in _STAGES:
+                    if name in self.queries:
+                        self.drain(name)
+                if self.batch_ids() == before:
+                    break
+        except Exception as exc:  # noqa: BLE001 - raised after the stops
+            errors.append(exc)
+        for name, q in self.queries.items():
+            if q.isActive and not _await(lambda q=q: not q.status["isTriggerActive"], 60):
+                log.warning("%s: trigger still in flight at stop()", name)
             try:
                 q.stop()
-                q.awaitTermination(60)
-            except Exception:  # noqa: BLE001 - teardown best-effort
-                pass
+            except Exception as exc:  # noqa: BLE001 - raised below
+                errors.append(exc)
+            if not _await(lambda q=q: not q.isActive, 60):
+                errors.append(RuntimeError(f"{name} did not stop in 60s"))
+            if (exc := q.exception()) is not None:
+                errors.append(RuntimeError(f"{name} streaming query failed: {exc}"))
+        for exc in errors[0 if failing else 1:]:
+            log.error("streaming replay teardown: %s", exc)
+        if errors and not failing:
+            raise errors[0]
 
-    # one verdict per transaction, ever — even under redelivery
-    verdicts = _collect_verdicts(spark, d)
+
+def _run(spark, txns, tmp, drive, trigger, watermark_delay, stats,
+         shuffle_partitions, return_dirs=False):
+    """The runner body both entry points share: set up the topology,
+    ``drive(topology, stats)`` until every transaction has a verdict,
+    stop with the one teardown, then collect the verdicts. ``stats``
+    receives ``batches``: each query's last micro-batch id.
+
+    ``shuffle_partitions`` sets the stateful stages' state-partition
+    count for THIS run (applied to the session conf around each query
+    start, restored after). Size it to the key cardinality and
+    parallelism: every micro-batch, empty ones included, commits every
+    state partition's store (a 10k replay at 32 partitions measured
+    ~1.45 s per partition-commit under RocksDB full snapshots — see
+    with_rocksdb's changelog option). Unset, each stage gets the
+    session's count capped at its key cardinality
+    (``_Topology._state_partitions``)."""
+    topo = _Topology(spark, txns, tmp, trigger, watermark_delay, shuffle_partitions)
+    try:
+        drive(topo, stats)
+        if stats is not None:
+            stats["batches"] = topo.batch_ids()
+    except BaseException:
+        topo.stop(failing=True)
+        raise
+    topo.stop(failing=False)
+    # one verdict per transaction, ever — even under redelivery; read
+    # strictly after every query has stopped (the fused sink's
+    # concurrent-reader contract)
+    verdicts = _collect_verdicts(spark, topo.d)
     if return_dirs:
-        return verdicts, d, requests_dir
+        return verdicts, topo.d, topo.requests_dir
     return verdicts
 
 
-def _raw_result_rows(results_dir: str) -> int | None:
-    """Driver-side row count of the results sink via parquet footers —
-    NO Spark job. The Spark-side ``distinct().count()`` poll this
-    replaces measured a **1.4 s mean × 62 polls ≈ 88 s** of scheduler
-    contention during the continuous 10k replay. Footer counts can see
-    a batch directory mid-(over)write, so this is a cheap NECESSARY
-    signal only — callers must confirm completion with a Spark-side
-    read (the distinct() there is also what guards against transient
-    double-listings) before declaring done. pyarrow's default
-    ignore_prefixes skips dot/underscore paths, so _temporary task dirs
-    are never read.
-
-    Returns ``None`` — "can't tell", callers must fall back to the
-    Spark-side read — when the footer scan fails on anything but an
-    absent directory: e.g. ONE truncated orphan part file from a dead
-    task attempt would otherwise poison every subsequent poll and turn
-    a completed replay into a timeout (r9 review)."""
-    import pyarrow.dataset as pa_ds
-
-    try:
-        return pa_ds.dataset(results_dir, format="parquet").count_rows()
-    except FileNotFoundError:
-        return 0  # sink dir absent: nothing written yet
-    except Exception:  # noqa: BLE001 - unreadable footer: unknown
-        return None
+#: Trigger cadence under the drain-per-round policy: processAllAvailable
+#: waits for a trigger, so this is a drain-latency detail, not a knob.
+_ROUND_TRIGGER = "50 milliseconds"
 
 
-def run_streaming_replay_continuous(
-    spark,
-    txns,
-    tmp,
-    timeout_s: float = 600.0,
-    trigger_interval: str = "500 milliseconds",
-    heartbeat_interval_s: float = 1.0,
-    watermark_delay: str = "1 hour",
-    stats: dict | None = None,
-    shuffle_partitions: int | None = None,
-):
-    """The same file-coupled topology as ``run_streaming_replay`` with
-    the three queries CONTINUOUSLY RUNNING (one ``start()`` each,
-    processingTime triggers) instead of one availableNow restart per
-    feedback round — the deployment shape of the reference's actual
-    pipeline (flink/StreamyDb.scala:239 blocking execute), and the form
-    that measures the ENGINE rather than the harness: the availableNow
-    loop pays ~3-4 s of query start/stop per round × 3 queries × ~13
-    rounds at 10k txns, which dominates its wall time (r8 verdict item
-    2). Feedback flows through the directories automatically — each
-    file source discovers the other queries' newly-committed files on
-    its next trigger — and a driver-side heartbeat thread appends a
-    fresh-event-time row every ``heartbeat_interval_s`` so watermarks
-    advance while idle (reference D14, core/HeartBeatGenerator.scala:40
-    does exactly this every 5 s).
+def _drain_per_round(topo, stats, max_rounds, duplicate_feedback, interrupt_rounds):
+    """Drive policy of ``run_streaming_replay``. Each round writes its
+    heartbeat, then drains the key stage, then the txn stage — a
+    deterministic round-0..round-N fixpoint (the engine is
+    feedback-arrival-order-insensitive, so overlap between the living
+    queries only shortens the round count, never changes a verdict).
+    ``stats`` receives ``rounds``: rounds until every verdict was out.
 
-    ``shuffle_partitions`` sets the stateful stages' state-partition
-    count for THIS run (applied to the session conf at query start,
-    restored after; a stateful query pins it into its checkpoint on the
-    first batch). Size it to the workload's key cardinality and cluster
-    parallelism — hundreds on a real cluster, but for a 10k-txn replay
-    32 partitions is pure per-trigger overhead: every micro-batch
-    (including empty ones) commits every state partition's store, and
-    the instrumented run measured ~1.45 s per partition-commit under
-    RocksDB full-snapshot maintenance (32 batches × 32 partitions ≈
-    1,490 s of summed state-commit time for 10k transactions; empty
-    triggers cost 2-4 s wall). See also with_rocksdb's changelog
-    checkpointing, which attacks the per-commit snapshot cost itself.
+    An interrupt round KILLS the key stage mid-run (crash recovery;
+    reference flink/StreamyDb.scala:180-181): the living twin is killed
+    first (it would hold the checkpoint lock), then an availableNow
+    instance reading one request file per micro-batch is killed after
+    its first committed batch, leaving the checkpoint mid-round. The
+    next round's drain restarts the persistent query from it.
 
-    Returns the same verdict map (and optional ``stats``:
-    rounds-equivalent micro-batch counts per query) so the serial
-    oracle can gate it like the availableNow form."""
-    confs = {}
-    if shuffle_partitions is not None:
-        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    with _conf_override(spark, confs):
-        return _run_streaming_replay_continuous_inner(
-            spark, txns, tmp, timeout_s, trigger_interval,
-            heartbeat_interval_s, watermark_delay, stats,
-        )
+    Throttled ingestion is multi-batch, so ``watermark_delay`` MUST then
+    cover the fixture's event-time span: with 0 s, the first committed
+    batch moves the watermark to its own max event time and older rows
+    in the REMAINING request files are dropped as late (observed: ~85%
+    of the workload discarded, the loop wedged with verdicts stuck in
+    ``early``). Single-batch runs get away with 0 — the same sizing
+    rule production needs for out-of-order sources (engine_stream._admit).
+
+    ``duplicate_feedback`` then redelivers EVERY commit notification and
+    drains once more: the S3 'done' gate must swallow the duplicates
+    (exactly-once output from at-least-once input; SURVEY §2.3)."""
+    for rnd in range(max_rounds):
+        write_heartbeat(topo.spark, topo.requests_dir, rnd)
+        if rnd in interrupt_rounds:
+            live = topo.queries.pop("key_stage", None)
+            if live is not None:
+                kill_streaming_query(live)
+            q = topo.start("key_stage", {"availableNow": True}, {"maxFilesPerTrigger": "1"})
+            _await(lambda: not q.isActive or q.lastProgress is not None, 60)
+            # dying-query errors are the simulated crash; correctness is
+            # asserted on the restarted round's recovery
+            kill_streaming_query(topo.queries.pop("key_stage"))
+            continue
+        topo.drain("key_stage")
+        topo.drain("txn_stage")
+        if topo.done():
+            if stats is not None:
+                stats["rounds"] = rnd + 1
+            break
+
+    if duplicate_feedback:
+        # the copies keep their batch= subdirectory (the recursive
+        # listing sees any new path) and land atomically: the living key
+        # stage lists this directory on every trigger
+        for root, _dirs, files in os.walk(topo.d["feedback"]):
+            for f in files:
+                if f.endswith(".parquet"):
+                    src = os.path.join(root, f)
+                    _publish(os.path.join(root, f"dup_{f}"),
+                             lambda p, src=src: shutil.copyfile(src, p))
+        write_heartbeat(topo.spark, topo.requests_dir, 10_000)
+        # every request file was admitted in earlier rounds; this pass
+        # only drains the duplicated feedback (kind-2 messages apply on
+        # arrival — the watermark plays no role in their application)
+        topo.drain("key_stage")
+        topo.drain("txn_stage")
 
 
-def _run_streaming_replay_continuous_inner(
-    spark, txns, tmp, timeout_s, trigger_interval, heartbeat_interval_s,
-    watermark_delay, stats,
-):
-    import threading
-    import time as _t
-
-    d, requests_dir, n_txns = _loop_dirs(spark, txns, tmp)
-
-    stop_hb = threading.Event()
-    hb_err: list[Exception] = []
-
-    def heartbeats() -> None:
-        n = 0
-        while not stop_hb.wait(heartbeat_interval_s):
-            try:
-                write_heartbeat(spark, requests_dir, n)
-                n += 1
-            except Exception as exc:  # noqa: BLE001 - surfaced after the loop
-                hb_err.append(exc)
-                return
-
-    write_heartbeat(spark, requests_dir, 99_999)  # one pre-start beat
-    hb_thread = threading.Thread(target=heartbeats, daemon=True)
-    hb_thread.start()
-
-    def start(df_stream, out_dir, ckpt_name):
-        return (
-            df_stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(d["ckpt"], ckpt_name))
-            .trigger(processingTime=trigger_interval)
-            .start()
-        )
-
-    queries = {}
-    try:
-        queries["key_stage"] = start(
-            _key_stage_stream(spark, d, requests_dir, watermark_delay),
-            d["read_results"],
-            "key_stage",
-        )
-        # txn stage + feedback derivation fused into one query (r9
-        # verdict item 4): feedback is committed in the SAME trigger
-        # that lands the results, so the key stage sees it one
-        # file-discovery later instead of after the separate feedback
-        # query's own trigger + listing + commit — one fewer hop in
-        # every sequential feedback round.
-        queries["txn_stage"] = (
-            _txn_stage_stream(spark, d)
-            .writeStream.foreachBatch(_txn_fused_write(d))
-            .option(
-                "checkpointLocation", os.path.join(d["ckpt"], "txn_stage")
-            )
-            .trigger(processingTime=trigger_interval)
-            .start()
-        )
-
-        deadline = _t.time() + timeout_s
-        n_done = 0
-        raw: int | None = None
-        while _t.time() < deadline:
-            for name, q in queries.items():
-                exc = q.exception()
-                if exc is not None:
-                    raise RuntimeError(f"{name} query failed: {exc}")
-                if not q.isActive:
-                    raise RuntimeError(f"{name} query stopped unexpectedly")
-            if hb_err:
-                raise RuntimeError(f"heartbeat writer failed: {hb_err[0]}")
-            # Cheap footer-count poll first (no Spark job — see
-            # _raw_result_rows); only when it says "possibly done" —
-            # or can't tell (None: e.g. a truncated orphan part file
-            # from a dead task attempt poisons the footer scan forever,
-            # r9 review) — pay for the Spark-side distinct count, the
-            # real signal.
-            raw = _raw_result_rows(d["results"])
-            if raw is None or raw >= n_txns:
-                try:
-                    n_done = (
-                        spark.read.schema(es.TXN_RESULT_OUT)
-                        .option("recursiveFileLookup", "true")
-                        .parquet(d["results"])
-                        .select("transaction_id")
-                        .distinct()
-                        .count()
-                    )
-                except Exception:  # noqa: BLE001 - sink not committed yet
-                    n_done = 0
-            if n_done >= n_txns:
-                break
-            _t.sleep(0.5)
-        else:
+def _poll(topo, stats, timeout_s, heartbeat_interval_s):
+    """Drive policy of ``run_streaming_replay_continuous``: start the
+    heartbeat thread and both queries, then run the done check every
+    0.5 s until ``timeout_s``. Feedback flows on its own: each file
+    source discovers the other query's committed files."""
+    topo.start_heartbeats(heartbeat_interval_s)
+    for name in _STAGES:
+        topo.start(name)
+    deadline = time.time() + timeout_s
+    while True:
+        for name in _STAGES:
+            topo.check(name)
+        if topo.done():
+            return
+        if time.time() >= deadline:
             raise RuntimeError(
-                f"continuous replay timed out: {n_done}/{n_txns} committed "
-                f"verdicts (footer rows: {raw}) after {timeout_s:.0f}s"
+                f"continuous replay timed out: {topo.n_done}/{topo.n_txns} "
+                f"committed verdicts (footer rows: {topo.raw}) after "
+                f"{timeout_s:.0f}s"
             )
-        if stats is not None:
-            stats["batches"] = {
-                name: (q.lastProgress or {}).get("batchId")
-                for name, q in queries.items()
-            }
-    finally:
-        stop_hb.set()
-        for q in queries.values():
-            try:
-                q.stop()
-                q.awaitTermination(60)
-            except Exception:  # noqa: BLE001 - teardown best-effort
-                pass
-        hb_thread.join(timeout=10)
+        time.sleep(0.5)
 
-    return _collect_verdicts(spark, d)
+
+def run_streaming_replay(spark, txns, tmp, max_rounds=30, duplicate_feedback=False,
+                         interrupt_rounds=frozenset(), return_dirs=False,
+                         watermark_delay="0 seconds", stats=None, shuffle_partitions=None):
+    """Replay ``txns`` through the streaming topology, draining per round
+    (``_drain_per_round``: ``max_rounds``, ``interrupt_rounds``,
+    ``duplicate_feedback``, ``watermark_delay``; ``_run``:
+    ``shuffle_partitions``). Returns ``{transaction_id: succeeded}``, and
+    the directories too when ``return_dirs``."""
+    drive = functools.partial(
+        _drain_per_round, max_rounds=max_rounds, duplicate_feedback=duplicate_feedback,
+        interrupt_rounds=frozenset(interrupt_rounds),
+    )
+    return _run(spark, txns, tmp, drive, _ROUND_TRIGGER, watermark_delay, stats,
+                shuffle_partitions, return_dirs)
+
+
+def run_streaming_replay_continuous(spark, txns, tmp, timeout_s: float = 600.0,
+                                    trigger_interval: str = "500 milliseconds",
+                                    heartbeat_interval_s: float = 1.0,
+                                    watermark_delay: str = "1 hour",
+                                    stats: dict | None = None,
+                                    shuffle_partitions: int | None = None):
+    """Replay ``txns`` through the streaming topology under the poll
+    policy (``_poll``), queries on ``trigger_interval`` triggers, one
+    heartbeat every ``heartbeat_interval_s``; raises if not done within
+    ``timeout_s``. Returns the same verdict map as ``run_streaming_replay``."""
+    drive = functools.partial(_poll, timeout_s=timeout_s,
+                              heartbeat_interval_s=heartbeat_interval_s)
+    return _run(spark, txns, tmp, drive, trigger_interval, watermark_delay, stats,
+                shuffle_partitions)
 
 
 def with_rocksdb(spark, changelog: bool = True):

@@ -1,13 +1,15 @@
-"""Streaming-parity correctness: the transformWithStateInPandas pipeline
+"""Streaming-parity correctness: the applyInPandasWithState pipeline
 must produce the same commit/abort verdicts as the pure-Python serial
 oracle, end-to-end through the externalized feedback loop.
 
 Kafka isn't available in this container, so the loop is file-coupled
 (parquet dirs stand in for the four topics; the operator topology is
-identical — SURVEY.md §3.1). Each driver round runs the three queries
-with availableNow triggers against persistent checkpoints, then appends
-a heartbeat (reference D14, core/HeartBeatGenerator.scala) so the
-watermark advances and buffered event-time timers fire.
+identical — SURVEY.md §3.1). The runner (streaming/replay_loop.py)
+keeps two queries — key stage and txn stage — running on processingTime
+triggers. ``run_streaming_replay`` drives them round by round: a
+heartbeat (reference D14, core/HeartBeatGenerator.scala) so the
+watermark advances and buffered event-time timers fire, then a drain of
+each stage. ``run_streaming_replay_continuous`` lets them run and polls.
 """
 
 from __future__ import annotations
@@ -20,20 +22,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from streamy_db_spark import fixtures, oracle
+from streamy_db_spark.engine_batch import replay
 from streamy_db_spark.streaming import engine_stream as es
+from streamy_db_spark.streaming import replay_loop as rl
 from streamy_db_spark.streaming.replay_loop import (
     run_streaming_replay,
+    run_streaming_replay_continuous,
     with_rocksdb,
     write_heartbeat,
 )
-
-# the loop driver moved to the library (streamy_db_spark/streaming/
-# replay_loop.py) so bench.py can record streaming throughput through
-# the SAME harness these correctness tests drive; aliases below keep the
-# test bodies unchanged
-_write_heartbeat = write_heartbeat
-_with_rocksdb = with_rocksdb
-
 
 
 @pytest.mark.parametrize("mix", ["ref_smoke", "cas_chain"])
@@ -127,6 +124,57 @@ def fixtures_txn(ts_s, part, off, tid, asserts, updates):
     }
 
 
+def test_tied_positions_break_by_transaction_id(spark, tmp_path):
+    """A List[Transaction] record explodes into several transactions at
+    one (ts, partition, offset) position (core/package.scala:22-50); the
+    reference sorter runs them in transaction-id order
+    (flink/StreamyDb.scala:44-49). Listed here in reverse id order with
+    conflicting asserts, so list order and id order give different
+    verdicts: the oracle, the batch replay and the streaming runner must
+    all take id order."""
+    txns = [
+        fixtures_txn(0, 0, 0, "tx_c", [("a", None)], [("a", "C")]),
+        fixtures_txn(0, 0, 0, "tx_b", [("a", "A")], [("b", "B")]),
+        fixtures_txn(0, 0, 0, "tx_a", [("a", None)], [("a", "A")]),
+        fixtures_txn(1, 0, 1, "tx_d", [("a", "A"), ("b", "B")], []),
+    ]
+    expected, expected_state = oracle.serial_replay(txns)
+    assert expected == {"tx_a": True, "tx_b": True, "tx_c": False, "tx_d": True}
+    assert expected_state == {"a": "A", "b": "B"}
+
+    results_df, state_df = replay(fixtures.to_dataframe(spark, txns))
+    assert {r["transaction_id"]: r["succeeded"] for r in results_df.collect()} == expected
+    assert {r["key"]: r["value"] for r in state_df.collect()} == expected_state
+    assert run_streaming_replay(spark, txns, str(tmp_path)) == expected
+
+
+@pytest.mark.parametrize("policy", ["drain_per_round", "poll"])
+def test_dead_query_is_raised_not_restarted(spark, monkeypatch, tmp_path, policy):
+    """A stage whose micro-batch fails must surface as an error naming
+    the stage and the cause, under both drive policies — never be
+    restarted silently, never time out — and the teardown must leave no
+    active query behind."""
+
+    def failing_sink(d):
+        def write(batch_df, batch_id):
+            raise RuntimeError("injected sink failure")
+
+        return write
+
+    monkeypatch.setattr(rl, "_txn_fused_write", failing_sink)
+    txns = [fixtures_txn(0, 0, 0, "t1", [("a", None)], [("a", "1")])]
+    with pytest.raises(RuntimeError, match="txn_stage") as err:
+        if policy == "poll":
+            run_streaming_replay_continuous(
+                spark, txns, str(tmp_path), timeout_s=120.0,
+                trigger_interval="100 milliseconds", heartbeat_interval_s=0.3,
+            )
+        else:
+            run_streaming_replay(spark, txns, str(tmp_path))
+    assert "injected sink failure" in str(err.value)
+    assert spark.streams.active == []
+
+
 def test_streaming_kill_and_restart_exactly_once(spark, tmp_path):
     """The reference's central exactly-once claim under failure
     (flink/StreamyDb.scala:180-181: 5 s checkpointing): kill the key
@@ -137,7 +185,7 @@ def test_streaming_kill_and_restart_exactly_once(spark, tmp_path):
     exactly one verdict per transaction."""
     txns = fixtures.generate("cas_chain")[:60]
     expected, _ = oracle.serial_replay(txns)
-    with _with_rocksdb(spark):
+    with with_rocksdb(spark):
         got = run_streaming_replay(
             spark,
             txns,
@@ -173,7 +221,7 @@ def test_streaming_state_drains_after_quiescence(spark, tmp_path):
 
     # One more key-stage run: consume the LAST round's feedback (the loop
     # breaks as soon as verdicts are complete, before feeding it back).
-    _write_heartbeat(spark, requests_dir, 20_000)
+    write_heartbeat(spark, requests_dir, 20_000)
     reqs = spark.readStream.schema(es.KEY_MSG).option(
         "recursiveFileLookup", "true"
     ).parquet(requests_dir)
@@ -224,10 +272,6 @@ def test_continuous_replay_matches_serial_oracle(spark, tmp_path):
     the serial oracle: feedback flows through the directories with no
     per-round query restarts, heartbeats advance the watermark from a
     driver thread (reference D14 cadence)."""
-    from streamy_db_spark.streaming.replay_loop import (
-        run_streaming_replay_continuous,
-    )
-
     txns = fixtures.generate("ref_smoke")
     expected_results, _ = oracle.serial_replay(txns)
     stats: dict = {}
@@ -247,14 +291,13 @@ def test_continuous_replay_matches_serial_oracle(spark, tmp_path):
 
 
 def test_heartbeat_arrow_schema_mirrors_key_msg(spark, tmp_path):
-    """write_heartbeat writes driver-side with a pyarrow mirror of
-    engine_stream.KEY_MSG (no Spark job — see its docstring for the
-    measured why). The mirror must stay in lockstep: a heartbeat file
-    must land atomically (no temp residue a trigger could half-list),
-    round-trip under the Spark wire schema, and schema-INFER to exactly
-    KEY_MSG's field names and types — so any future KEY_MSG evolution
-    that forgets the mirror fails here, not as a mid-stream analysis
-    error in a 10-minute replay."""
+    """write_heartbeat writes driver-side with a pyarrow schema derived
+    from engine_stream.KEY_MSG (no Spark job — see its docstring for the
+    measured why). A heartbeat file must land atomically (no temp
+    residue a trigger could half-list), round-trip under the Spark wire
+    schema, and schema-INFER to exactly KEY_MSG's field names and types,
+    so a KEY_MSG change the heartbeat row does not follow fails here, not
+    as a mid-stream analysis error in a 10-minute replay."""
     req = str(tmp_path / "requests")
     write_heartbeat(spark, req, 7)
     files = os.listdir(req)
@@ -315,8 +358,6 @@ def test_shuffle_partitions_restored_when_setup_fails(
     run fails BEFORE the stream loop starts (fixture write failure,
     disk full): a leaked setting would silently run every subsequent
     query in the session at the replay's partition count (r9 review)."""
-    from streamy_db_spark.streaming import replay_loop as rl
-
     prev = spark.conf.get("spark.sql.shuffle.partitions")
 
     def boom(*args, **kwargs):

@@ -152,9 +152,8 @@ def test_state_block_join_no_exchange_on_state_side(spark, tmp_path):
 def test_state_block_join_folds_each_pair_once(spark, tmp_path):
     """r13 optimization gate: the block join's per-PAIR predicate
     carries exactly ONE array fold (the dot) — each side's norm is
-    projected once per ROW before the join (plans/r13/
-    semantic_gate_block_join_{before,after}.txt: the before-plan's
-    join condition folded every pair three times). The cosine stays
+    projected once per ROW before the join (the earlier plan's join
+    condition folded every pair three times). The cosine stays
     bit-identical (same doubles, same division), which the equality
     suites in this file pin."""
     d = IncrementalSemanticDeduper(
